@@ -254,9 +254,7 @@ def main() -> None:
     }
     # cross-round regression check: compare per-query vs the newest prior
     # BENCH_r{N}.json (same headline keys across rounds); >1.5x is flagged
-    prior = _latest_prior_bench()
-    if prior and prior.get("sf") != sf:
-        prior = None  # cross-SF comparison is meaningless
+    prior = _latest_prior_bench(sf, out["load"]["cores"])
     if prior:
         # compare like-for-like: prior rounds recorded best-of-2 under
         # "queries" (r7+ records medians there and mins under
@@ -344,11 +342,21 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def _latest_prior_bench() -> dict | None:
+def _latest_prior_bench(sf, cores, here: str | None = None) -> dict | None:
+    """The newest BENCH_r{N}.json in ``here`` (default: beside this file),
+    or None when it was taken at another sf or core count: those ratios
+    measure the fixture or the box, not the code (a 4-core run flagged 7
+    ">1.5x regressions" against the 32-core r15 prior from cores alone)."""
+    prior = _load_latest_bench(here or os.path.dirname(os.path.abspath(__file__)))
+    if prior and prior.get("sf") == sf and (prior.get("load") or {}).get("cores") == cores:
+        return prior
+    return None
+
+
+def _load_latest_bench(here: str) -> dict | None:
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
     rounds = []
     for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", p)
@@ -374,12 +382,14 @@ def _latest_prior_bench() -> dict | None:
             qmin = re.search(r'"queries_min": (\{[^{}]*\})', tail)
             mtot = re.search(r'"min_total_sec": ([0-9.]+)', tail)
             msf = re.search(r'"sf": ([0-9.]+)', tail)
+            mcores = re.search(r'"cores": ([0-9]+)', tail)
             if qmin:
                 return {
                     "queries_min": json.loads(qmin.group(1)),
                     "value": float(mtot.group(1)) if mtot else None,
                     "min_total_sec": float(mtot.group(1)) if mtot else None,
                     "sf": float(msf.group(1)) if msf else None,
+                    "load": {"cores": int(mcores.group(1))} if mcores else {},
                     "recovered_from_tail": True,
                 }
         return parsed

@@ -19,41 +19,10 @@ __version__ = "0.1.0"
 
 
 def unpersist_all() -> int:
-    """Release every memoized `.cache()` / localCheckpoint DataFrame the
-    operator modules hold (VERDICT r3 What's-wrong #5). The memos are the
-    right call for a one-shot driver sweep — repeated operator invocations
-    share one cached lineage — but a long-lived session (notebook, service)
-    accumulates executor storage memory without a release hook. Call this
-    between pipeline phases; the next operator invocation transparently
-    rebuilds its cache. Returns the number of DataFrames released."""
-    import importlib
+    """Release every memoized DataFrame the operators hold, so a long-lived
+    session (notebook, service) can return executor storage between
+    pipeline phases; the next operator call rebuilds what it needs. Returns
+    the number of DataFrames released. The rule is in ``sdp_spark.memo``."""
+    from sdp_spark import memo
 
-    sites = (
-        ("sdp_spark.operators.llm", "_SH_CACHE"),
-        ("sdp_spark.operators.llm", "_SIG_CACHE"),
-        ("sdp_spark.operators.llm", "_EMB_CACHE"),
-        ("sdp_spark.operators.llm", "_CAPPED_CACHE"),
-        ("sdp_spark.operators.llm", "_CLUSTER_CACHE"),
-        ("sdp_spark.operators.llm", "_RESOLVE_CACHE"),
-        ("sdp_spark.operators.llm", "_VEC_GROUPS_CACHE"),
-        ("sdp_spark.operators.llm", "_KNN_EDGES_CACHE"),
-        ("sdp_spark.operators.llm", "_NSW_UND_CACHE"),
-        ("sdp_spark.operators.llm", "_KNNG_ASSIGNED_CACHE"),
-        ("sdp_spark.operators.analytics", "_EVENTS_DAILY_CACHE"),
-        ("sdp_spark.operators.corpus", "_GRAMS_CACHE"),
-        ("sdp_spark.operators.fulltext", "_TF_CACHE"),
-    )
-    n = 0
-    for mod_name, attr in sites:
-        try:
-            cache = getattr(importlib.import_module(mod_name), attr)
-        except (ImportError, AttributeError):
-            continue
-        for df in cache.values():
-            try:
-                df.unpersist(blocking=False)
-            except Exception:
-                pass  # session already stopped; dropping the ref suffices
-            n += 1
-        cache.clear()
-    return n
+    return memo.unpersist_all()

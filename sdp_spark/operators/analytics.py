@@ -32,6 +32,7 @@ from sdp_spark.functions.num import (
     sql_dround,
     sql_dsum,
 )
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table
 
@@ -651,34 +652,20 @@ EARS_SCORED_SQL = f"""
 # independently (EARS, EARS family, CUSUM, EWMA, Serfling, Farrington,
 # excess burden, epidemic onset, Holt, historical limits) — in the
 # detector-concordance panel that meant EIGHT redundant event scans +
-# groupBys inside one job. Memoized per (app, sf_dir) as a LAZY
-# localCheckpoint (guide §1.2): |types × days| rows, bounded by calendar
-# not data volume; released by sdp_spark.unpersist_all.
-_EVENTS_DAILY_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# groupBys inside one job. Memoized as a LAZY localCheckpoint (guide §1.2):
+# |types × days| rows, bounded by calendar not data volume.
+@memo
 def events_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, day DATE, n BIGINT) daily rollup of events. The key
-    carries the events file's fingerprint so a rewrite of the same path
-    (tests plant outbreaks in place) retires the checkpointed rollup."""
-    from sdp_spark.sources.fixtures import table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "events"),
-    )
-    if key not in _EVENTS_DAILY_CACHE:
-        e = table(spark, sf_dir, "events")
-        _EVENTS_DAILY_CACHE[key] = (
-            e.groupBy(
-                "event_type",
-                F.col("ts").cast("timestamp").cast("date").alias("day"),
-            )
-            .agg(F.count("*").alias("n"))
-            .localCheckpoint(eager=False)
+    """(event_type, day DATE, n BIGINT) daily rollup of events."""
+    e = table(spark, sf_dir, "events")
+    return (
+        e.groupBy(
+            "event_type",
+            F.col("ts").cast("timestamp").cast("date").alias("day"),
         )
-    return _EVENTS_DAILY_CACHE[key]
+        .agg(F.count("*").alias("n"))
+        .localCheckpoint(eager=False)
+    )
 
 
 def events_daily_dc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -301,7 +301,8 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("comp", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    mass = comp.agg(F.sum("comp")).collect()[0][0]
+    # Σ(labels) as decimal(38,0): a BIGINT sum of ids near 2^63 overflows
+    mass = comp.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
     for _ in range(_CC_MAX_ROUNDS):
         # propagate each node's label across its out-edges, keep the min of
         # (own label, every inbound neighbour label); comp is the small side.
@@ -341,7 +342,7 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # lazy checkpoint: the probe's agg materializes it, so each round
         # is ONE job (the old eager ckpt + separate probe ran two).
-        new_mass = comp.agg(F.sum("comp")).collect()[0][0]
+        new_mass = comp.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
         if new_mass == mass:
             break
         mass = new_mass

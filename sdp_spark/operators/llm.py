@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sdp_spark.functions.num import DEC, KNUTH, KNUTH_MOD, dround, sql_dround
+from sdp_spark.memo import evict, memo, release
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table, wide_table
 
@@ -45,45 +46,32 @@ def _docs_tokens(spark: SparkSession, sf_dir: str, wide: bool = False) -> DataFr
     return t(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
 
 
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _emb_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with double-cast vector + L2 norm — the shared preamble of
     every similarity/dedup consumer (dot-product math wants doubles; the
     fold order matches DuckDB's list_sum for oracle parity). wide_table for
-    the same reason as _docs_tokens: per-row O(dim) arithmetic. Memoized
-    cached per (app, sf): the norm fold is an INTERPRETED higher-order
-    expression, so every consumer re-deriving it pays the eval again —
-    one cached materialization serves kmeans/semdedup/ANN/dedup_embed
-    (released by sdp_spark.unpersist_all)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_CACHE:
-        emb = wide_table(spark, sf_dir, "embeddings").withColumn(
-            "dvec", F.col("embedding").cast("array<double>")
-        )
-        _EMB_CACHE[key] = emb.withColumn(
-            "norm",
-            F.sqrt(
-                F.aggregate(F.transform("dvec", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-            ),
-        ).cache()
-    return _EMB_CACHE[key]
+    the same reason as _docs_tokens: per-row O(dim) arithmetic. Cached: the
+    norm fold is an INTERPRETED higher-order expression, so every consumer
+    re-deriving it pays the eval again — one cached materialization serves
+    kmeans/semdedup/ANN/dedup_embed."""
+    emb = wide_table(spark, sf_dir, "embeddings").withColumn(
+        "dvec", F.col("embedding").cast("array<double>")
+    )
+    return emb.withColumn(
+        "norm",
+        F.sqrt(
+            F.aggregate(F.transform("dvec", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
+        ),
+    ).cache()
 
 
-# Row count of the embeddings frame, memoized beside _EMB_CACHE. A count is
-# a property of the DATA (valid across cache eviction/rebuild), so it is not
-# registered in unpersist_all; it exists so occupancy/geometry decisions
-# (serve-side coalesce below, the sqrt-N IVF cell count) pay ONE cheap job
-# per session instead of one per invocation.
-_EMB_N: dict[tuple[str, str], int] = {}
-
-
+@memo
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_N:
-        _EMB_N[key] = _emb_normed(spark, sf_dir).count()
-    return _EMB_N[key]
+    """Row count of the embeddings frame, so occupancy/geometry decisions
+    (serve-side coalesce below, the sqrt-N IVF cell count) pay ONE cheap
+    job per session instead of one per invocation."""
+    return _emb_normed(spark, sf_dir).count()
 
 
 # Minimum candidate rows per task for broadcast-probe SERVE keys (each row
@@ -95,36 +83,24 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
 _SERVE_MIN_ROWS = 512
 
 
-# Memoized cached DataFrames keyed by (spark app, sf_dir): repeated operator
-# invocations in one session reuse ONE cached lineage instead of stacking a
-# fresh cache per call (storage-memory leak otherwise).
-_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = _shingles(_docs_tokens(spark, sf_dir, wide=True)).cache()
-    return _SH_CACHE[key]
+    return _shingles(_docs_tokens(spark, sf_dir, wide=True)).cache()
 
 
+@memo
 def _cached_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures + shingle counts, cached once per (app, sf_dir):
-    the final plan consumes this from four subtrees (band self-join sides +
-    two size joins) — uncached, the 16-permutation aggregation recomputes
-    per subtree."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_CACHE:
-        sh = _cached_shingles(spark, sf_dir)
-        _SIG_CACHE[key] = sh.groupBy("doc_id").agg(
-            *[
-                F.min(F.xxhash64(F.lit(p), F.col("shingle"))).alias(f"h{p}")
-                for p in range(_NUM_PERM)
-            ],
-            F.count("*").alias("n_sh"),
-        ).cache()
-    return _SIG_CACHE[key]
+    """MinHash signatures + shingle counts, cached: the final plan consumes
+    this from four subtrees (band self-join sides + two size joins) —
+    uncached, the 16-permutation aggregation recomputes per subtree."""
+    sh = _cached_shingles(spark, sf_dir)
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.xxhash64(F.lit(p), F.col("shingle"))).alias(f"h{p}")
+            for p in range(_NUM_PERM)
+        ],
+        F.count("*").alias("n_sh"),
+    ).cache()
 
 
 # ---------------------------------------------------------------------------
@@ -176,37 +152,29 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-# Exact-duplicate cluster map for the near-dedup collapse prefix, memoized
-# per (app, sf_dir) like the shingle/signature caches it sits beside.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ck, rep): exact-duplicate cluster id (text hash) and the
     min-doc_id representative, restricted to docs that are in the MinHash
     pipeline at all (>= 3 tokens, i.e. present in the signature table).
     One shuffle keyed on the 64-bit ck — text itself never shuffles."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLUSTER_CACHE:
-        sig = _cached_signatures(spark, sf_dir)
-        clusters = (
-            _docs_tokens(spark, sf_dir, wide=True)
-            .select("doc_id", F.xxhash64("text").alias("ck"))
-            .join(sig.select("doc_id"), "doc_id")
-        )
-        _CLUSTER_CACHE[key] = clusters.withColumn(
-            "rep", F.min("doc_id").over(Window.partitionBy("ck"))
-        ).cache()
-    return _CLUSTER_CACHE[key]
+    sig = _cached_signatures(spark, sf_dir)
+    clusters = (
+        _docs_tokens(spark, sf_dir, wide=True)
+        .select("doc_id", F.xxhash64("text").alias("ck"))
+        .join(sig.select("doc_id"), "doc_id")
+    )
+    return clusters.withColumn(
+        "rep", F.min("doc_id").over(Window.partitionBy("ck"))
+    ).cache()
 
 
 # Duplicate-density gate for the exact-collapse prefix: below this fraction
 # of non-representative docs the collapse's extra join stages cost more than
 # the O(copies²) candidate rows they avoid (measured both ways, SCALING.md
-# round-6). Decision memoized per (app, sf_dir) — one 1-row aggregate over
-# the cached cluster map, then free.
+# round-6). The decision is memoized — one 1-row aggregate over the cached
+# cluster map, then free.
 _NEAR_COLLAPSE_MIN_DUP_FRAC = 0.05
-_COLLAPSE_DECISION: dict[tuple[str, str], bool] = {}
 
 
 @register(
@@ -280,25 +248,20 @@ def llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo
 def _collapse_dense(spark: SparkSession, sf_dir: str) -> bool:
     """The shared duplicate-density gate for the exact-collapse prefixes
-    (MinHash and n-gram paths): one memoized 1-row aggregate over the
-    cached cluster map per (app, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COLLAPSE_DECISION:
-        stats = (
-            _cached_clusters(spark, sf_dir)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("doc_id") != F.col("rep")).cast("long")).alias("dups"),
-            )
-            .first()
+    (MinHash and n-gram paths): one 1-row aggregate over the cached
+    cluster map."""
+    stats = (
+        _cached_clusters(spark, sf_dir)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum((F.col("doc_id") != F.col("rep")).cast("long")).alias("dups"),
         )
-        _COLLAPSE_DECISION[key] = (
-            stats["n"] > 0
-            and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
-        )
-    return _COLLAPSE_DECISION[key]
+        .first()
+    )
+    return stats["n"] > 0 and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
 
 
 def _near_dedup_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,20 +393,13 @@ def _capped_postings(sh: DataFrame, cap: int) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-_CAPPED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """df-capped postings, cached once per (app, sf_dir): the ngram-Jaccard
-    self-join consumes this from BOTH sides, and keeper resolution /
-    train-corpus re-execute the pair plan — uncached, the df aggregation +
-    anti-join reruns per subtree per invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CAPPED_CACHE:
-        _CAPPED_CACHE[key] = _capped_postings(
-            _cached_shingles(spark, sf_dir), _NGRAM_DF_CAP
-        ).cache()
-    return _CAPPED_CACHE[key]
+    """df-capped postings, cached: the ngram-Jaccard self-join consumes
+    this from BOTH sides, and keeper resolution / train-corpus re-execute
+    the pair plan — uncached, the df aggregation + anti-join reruns per
+    subtree per invocation."""
+    return _capped_postings(_cached_shingles(spark, sf_dir), _NGRAM_DF_CAP).cache()
 
 
 # The deterministic candidate-pair query, shared verbatim by the
@@ -597,14 +553,13 @@ _NEAR_RESOLVE_SQL = f"""
 
 _MAX_CC_ITERS = 25
 
-# Memoized converged label assignments per (app, sf_dir): keeper resolution
-# is consumed twice per sweep (its own key + the near-deduped train corpus)
-# and the propagation loop's per-round actions are the dominant cost.
-_RESOLVE_CACHE: dict[tuple[str, str], DataFrame] = {}
 
-
+@memo
 def _propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative min-label propagation to convergence; returns (node, label).
+    Memoized: keeper resolution is consumed twice per sweep (its own key +
+    the near-deduped train corpus) and the propagation loop's per-round
+    actions are the dominant cost.
     The pair GRAPH is ~0.1% of the corpus (only near-duplicates appear), so
     the loop runs at a narrow shuffle width — per-round overhead is fixed
     cost, not data cost; the corpus-side plans keep the session's width.
@@ -678,8 +633,9 @@ def _propagate_loop(pairs: DataFrame) -> DataFrame:
     # graphs.py CC idiom): labels only ever DECREASE, so Σ(labels) is
     # strictly decreasing until the fixpoint — the lazy checkpoint is
     # materialized by the probe agg, ONE job per round where the eager
-    # checkpoint + changed-count pair ran two.
-    mass = labels.agg(F.sum("label")).collect()[0][0]
+    # checkpoint + changed-count pair ran two. Summed as decimal(38,0): a
+    # BIGINT sum of ids near 2^63 overflows (ANSI mode throws).
+    mass = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
     for _ in range(_MAX_CC_ITERS):
         nbr = (
             edges.join(labels, F.col("dst") == F.col("node"))
@@ -698,9 +654,12 @@ def _propagate_loop(pairs: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
-        new_mass = merged.agg(F.sum("label")).collect()[0][0]
+        new_mass = merged.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+        # the probe materialized merged, so the round it replaced is garbage
+        release(labels)
         labels = merged
         if new_mass == mass:
+            release(edges)
             return labels
         mass = new_mass
     raise RuntimeError(
@@ -728,12 +687,7 @@ def llm_dedup_near_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned; for adversarial long-chain graphs swap the iteration
     body for large-star/small-star (O(log n) rounds) — the surrounding
     contract (pairs in, doc_id→keeper_doc out) is unchanged."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RESOLVE_CACHE:
-        labels = _RESOLVE_CACHE[key]
-    else:
-        labels = _propagate_labels(spark, sf_dir)
-        _RESOLVE_CACHE[key] = labels
+    labels = _propagate_labels(spark, sf_dir)
     w = Window.partitionBy("keeper_doc")
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("keeper_doc")
@@ -1925,10 +1879,6 @@ _KM_ITERS = 4
 # K ~ 1e5-1e8 a 100 TB corpus needs (VERDICT r4 "what's wrong" #3).
 _KM_LITERAL_MAX = 16
 
-# Converged centroids memoized per (app, sf_dir, k): plain Python lists
-# (K x dim floats) — llm_cluster_kmeans and llm_semdedup consume one fit.
-_KM_CACHE: dict[tuple[str, str, int], list] = {}
-
 
 def _km_dist_cols(df: DataFrame, cents: list) -> DataFrame:
     """Append d0..d{K-1} squared-distance columns (zip_with fold, no UDF).
@@ -2101,11 +2051,13 @@ def _km_fit_sample_cap(spark: SparkSession) -> int:
     )
 
 
-def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
+@memo
+def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int = _KM_K) -> list:
     """Run Lloyd's to _KM_ITERS and return the K x dim centroid list
     (deterministic: seeded from the K lowest vec_ids, lowest-index
     tie-breaks). K defaults to _KM_K; any K works — assignment picks the
-    literal-codegen or broadcast-Arrow strategy per _km_assign.
+    literal-codegen or broadcast-Arrow strategy per _km_assign. Memoized:
+    llm_cluster_kmeans and llm_semdedup consume one fit.
 
     Fit strategy by N (mirrors _km_assign's dual physical path; the
     threshold is _km_fit_sample_cap — 1% of the live driver heap, so a
@@ -2127,10 +2079,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
       _km_assign, per-dim mean via posexplode + two-level agg (partial
       map-side combine, K x dim rows on the wire), K x dim driver state.
     See llm_cluster_kmeans for the distributed-shape notes."""
-    k = _KM_K if k is None else k
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _KM_CACHE:
-        return _KM_CACHE[key]
     # _emb_normed is a memoized cached frame, so each of the fit jobs
     # re-reads the materialized cache, not the parquet+normalize lineage
     emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
@@ -2179,7 +2127,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
             # empty clusters keep their previous centroid (standard Lloyd's)
             for r in upd:
                 cents[r["cluster"]] = r["cent"]
-    _KM_CACHE[key] = cents
     return cents
 
 
@@ -2493,9 +2440,9 @@ _PQ_M = 8      # subspaces
 _PQ_DSUB = 8   # dims per subspace (8 x 8 = 64)
 _PQ_KS = 16    # centroids per subspace -> 4-bit codes
 _PQ_POOL = 100  # ADC candidate pool per query before exact rescore
-_PQ_CACHE: dict[tuple[str, str], list] = {}
 
 
+@memo
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Per-subspace K=16 codebooks fit by the SAME driver-side Lloyd's as
     _kmeans_fit's sampled branch (seeds = the K lowest vec_ids' subvectors,
@@ -2507,9 +2454,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     by design (how FAISS does it); encoding below is distributed."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -2533,7 +2477,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
                 if len(members):
                     cmat[c] = members.mean(axis=0)
         books.append([row.tolist() for row in cmat])
-    _PQ_CACHE[key] = books
     return books
 
 
@@ -2698,9 +2641,9 @@ _IVFPQ_NPROBE = 5
 # Replication costs 2x index size — but the index is PQ codes, so it is
 # still 16x smaller than raw vectors.
 _IVFPQ_NASSIGN = 2
-_IVFPQ_CACHE: dict[tuple[str, str], tuple] = {}
 
 
+@memo
 def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
     """(centroids, residual codebooks) for the composed index — the
     production IVF-PQ refinement: codebooks are trained on RESIDUALS
@@ -2718,9 +2661,6 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
     sf0.1 recall@5 0.891 -> 0.945)."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -2756,8 +2696,7 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
                 if len(members):
                     cb[c] = members.mean(axis=0)
         books.append(cb)
-    _IVFPQ_CACHE[key] = (cmat, books)
-    return _IVFPQ_CACHE[key]
+    return cmat, books
 
 
 def _ivfpq_encode_udf(spark: SparkSession, cmat, books):
@@ -3000,12 +2939,10 @@ _KNNG_REFINE_DEGREE = 16  # intermediate out-degree during build+refine
 # degree 16 and truncating to 8 at the end measures 0.60 -> 0.75 -> 0.83
 # over the two rounds, and each round stays O(N * (2*16)^2) = linear)
 
-# Spherical-k-means cell centroids memoized per (app, sf_dir, k): unit-norm
-# K x dim float lists — the parametric-K sibling of _ivfpq_model's coarse
-# quantizer (that one is pinned at _IVF_K and carries PQ codebooks).
-_SPH_CACHE: dict[tuple[str, str, int], list] = {}
-
-
+# Spherical-k-means cell centroids as unit-norm K x dim float lists — the
+# parametric-K sibling of _ivfpq_model's coarse quantizer (that one is
+# pinned at _IVF_K and carries PQ codebooks).
+@memo
 def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
     """Unit-norm spherical-k-means centroids (Lloyd on the sphere:
     assign by dot product, re-mean, renormalize; deterministic lowest-
@@ -3017,9 +2954,6 @@ def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
     is why the build replicates into 3 cells rather than 2)."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _SPH_CACHE:
-        return _SPH_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -3042,10 +2976,10 @@ def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
                 nrm = np.sqrt((mu * mu).sum())
                 if nrm > 0:
                     cmat[c] = mu / nrm
-    _SPH_CACHE[key] = [row.tolist() for row in cmat]
-    return _SPH_CACHE[key]
+    return [row.tolist() for row in cmat]
 
 
+@memo
 def _knng_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, dvec=UNIT vector, cells=top-_KNNG_IVF_NASSIGN cell ids)
     for the graph build and its search-entry map. Assignment runs on
@@ -3054,64 +2988,38 @@ def _knng_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths (literal codegen / broadcast matmul) serve the spherical
     quantizer unchanged. K ~ sqrt(N), floor 8 / cap 256.
 
-    Memoized per (app, sf_dir) as an eager localCheckpoint (r14,
-    guide §1.2): the assignment is an ArrowEvalPython subtree (broadcast
-    matmul in a pandas UDF), and every UNCACHED reference re-paid the
-    Python-boundary evaluation — twice per _cell_topk_edges call (src
-    AND dst of the per-cell self-join), again in _nsw_entries, again in
-    the index persist. Bounded state: N x (dvec + NASSIGN ints) narrow
-    rows, same discipline as _VEC_GROUPS_CACHE; evicted by
-    ann_index_build(force=True) alongside the other component memos. The
-    key carries the embeddings file's fingerprint so an in-place rewrite
-    of the same path retires the checkpointed assignment."""
-    from sdp_spark.sources.fixtures import table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    if key in _KNNG_ASSIGNED_CACHE:
-        return _KNNG_ASSIGNED_CACHE[key]
+    Memoized as an eager localCheckpoint (r14, guide §1.2): the
+    assignment is an ArrowEvalPython subtree (broadcast matmul in a
+    pandas UDF), and every UNCACHED reference re-paid the Python-boundary
+    evaluation — twice per _cell_topk_edges call (src AND dst of the
+    per-cell self-join), again in _nsw_entries, again in the index
+    persist. Bounded state: N x (dvec + NASSIGN ints) narrow rows, same
+    discipline as _vec_groups."""
     emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec", "norm")
     n = _emb_count(spark, sf_dir)
     k_cells = max(8, min(256, int(n ** 0.5)))
     cents = _spherical_cells(spark, sf_dir, k_cells)
     unit = F.transform("dvec", lambda x: x / F.col("norm"))
-    _KNNG_ASSIGNED_CACHE[key] = _km_assign(
+    return _km_assign(
         emb.select("vec_id", unit.alias("dvec")),
         cents,
         # the fit clamps k to its sample (ADVICE r12 #1), so a tiny
         # corpus can return fewer than NASSIGN centroids
         probe_n=min(_KNNG_IVF_NASSIGN, len(cents)),
     ).localCheckpoint(eager=True)
-    return _KNNG_ASSIGNED_CACHE[key]
 
 
-# Exact-duplicate VECTOR groups, memoized per (app, sf_dir): (vec_id, gid)
-# with gid = the group's global-min vec_id. The ANN build's collapse gate
-# rides these the way the text-dedup chain rides _cached_clusters.
-_VEC_GROUPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Cell-assigned corpus per (app, sf_dir) — see _knng_assigned.
-_KNNG_ASSIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_VEC_DUP_DENSE: dict[tuple[str, str], bool] = {}
-# Refined k-NN edge lists per (app, sf, k_out) — see _ivf_knn_edges.
-_KNN_EDGES_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+# Exact-duplicate VECTOR groups: (vec_id, gid) with gid = the group's
+# global-min vec_id. The ANN build's collapse gate rides these the way the
+# text-dedup chain rides _cached_clusters.
+@memo
 def _vec_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VEC_GROUPS_CACHE:
-        emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
-        g = emb.groupBy("dvec").agg(F.min("vec_id").alias("gid"))
-        _VEC_GROUPS_CACHE[key] = (
-            emb.join(g, "dvec")
-            .select("vec_id", "gid")
-            .localCheckpoint(eager=True)
-        )
-    return _VEC_GROUPS_CACHE[key]
+    emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
+    g = emb.groupBy("dvec").agg(F.min("vec_id").alias("gid"))
+    return emb.join(g, "dvec").select("vec_id", "gid").localCheckpoint(eager=True)
 
 
+@memo
 def _vec_dup_dense(spark: SparkSession, sf_dir: str) -> bool:
     """Duplicate-density gate for the ANN-graph collapse prefix — the
     _collapse_dense doctrine applied to vectors: below the shared 5%
@@ -3121,19 +3029,14 @@ def _vec_dup_dense(spark: SparkSession, sf_dir: str) -> bool:
     self-join output-bound and the collapse is the difference between
     finishing and not (measured: the 90%-dup 100x fixture's plain build
     did not finish in 10 min; collapsed, seconds)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VEC_DUP_DENSE:
-        stats = _vec_groups(spark, sf_dir).agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("vec_id") != F.col("gid")).cast("long")).alias("dups"),
-        ).first()
-        _VEC_DUP_DENSE[key] = (
-            stats["n"] > 0
-            and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
-        )
-    return _VEC_DUP_DENSE[key]
+    stats = _vec_groups(spark, sf_dir).agg(
+        F.count("*").alias("n"),
+        F.sum((F.col("vec_id") != F.col("gid")).cast("long")).alias("dups"),
+    ).first()
+    return stats["n"] > 0 and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
 
 
+@memo
 def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
     """IVF-bootstrapped approximate k-NN edge list — the scale-safe graph
     BUILD the exact `llm_knn_graph` cannot be (VERDICT r11 next-round
@@ -3157,10 +3060,11 @@ def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
     Deterministic: the k-means fit is the cached deterministic-seed
     `_kmeans_fit`; ties in assignment break to the lowest centroid
     index; cosine is the shared 4 dp fold; ranking tiebreaks on
-    neighbor_id. Returns (vec_id, neighbor_id, cos_sim, rnk)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_out)
-    if key in _KNN_EDGES_CACHE:
-        return _KNN_EDGES_CACHE[key]
+    neighbor_id. Returns (vec_id, neighbor_id, cos_sim, rnk).
+
+    Memoized per k_out: the graph is consumed by llm_knn_graph_ivf, the
+    NSW search, the recall eval AND the index persist in one session —
+    one checkpointed build (k_out*N narrow rows) serves all."""
     k_inner = max(k_out, _KNNG_REFINE_DEGREE)
     if _vec_dup_dense(spark, sf_dir):
         # refinement runs INSIDE the collapse, at DIRECTION grain (the
@@ -3179,14 +3083,9 @@ def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
         refined = _nndescent_refine(
             spark, sf_dir, _cell_topk_edges(both, both, k_inner), k_inner
         )
-    # memoized per (app, sf, k): the graph is consumed by llm_knn_graph_ivf,
-    # the NSW search, the recall eval AND the index persist in one session —
-    # one checkpointed build serves all (bounded: k_out*N narrow rows;
-    # released by sdp_spark.unpersist_all)
-    _KNN_EDGES_CACHE[key] = (
-        refined.filter(F.col("rnk") <= k_out).localCheckpoint(eager=True)
-    )
-    return _KNN_EDGES_CACHE[key]
+    out = refined.filter(F.col("rnk") <= k_out).localCheckpoint(eager=True)
+    release(refined)
+    return out
 
 
 def _nndescent_refine(
@@ -3261,18 +3160,21 @@ def _nndescent_refine(
                 ("dot", _pa.float64()),
             ]
         )
+        def rows(want):
+            # every pair id must be a unit-frame id (edges derive from the
+            # assigned corpus) — a miss would silently mis-gather
+            at = _np.searchsorted(sid, want).clip(0, len(sid) - 1)
+            if len(sid) == 0 or (sid[at] != want).any():
+                raise ValueError("pair id not in the unit-vector frame")
+            return at
+
         for b in batches:
             if b.num_rows == 0:
                 continue
             va_ids = b.column("vec_id").to_numpy()
             vb_ids = b.column("neighbor_id").to_numpy()
-            ia = _np.searchsorted(sid, va_ids)
-            ib = _np.searchsorted(sid, vb_ids)
-            # every pair id must be a unit-frame id (edges derive from the
-            # assigned corpus) — a miss would silently mis-gather
-            assert (sid[ia] == va_ids).all() and (sid[ib] == vb_ids).all()
-            A = U[ia]
-            B = U[ib]
+            A = U[rows(va_ids)]
+            B = U[rows(vb_ids)]
             acc = _np.zeros(len(va_ids))
             for i in range(dim):
                 acc += A[:, i] * B[:, i]
@@ -3292,6 +3194,7 @@ def _nndescent_refine(
     # per-round note below) — materialize it once
     ranked = edges.localCheckpoint(eager=True)
     for _ in range(rounds):
+        prev = ranked
         cur = ranked.select("vec_id", "neighbor_id")
         und = cur.unionByName(
             cur.select(
@@ -3327,6 +3230,7 @@ def _nndescent_refine(
             .filter(F.col("rnk") <= k_out)
             .localCheckpoint(eager=True)
         )
+        release(prev)  # folded into the checkpointed ranked
     return ranked
 
 
@@ -3603,29 +3507,20 @@ def llm_sim_search_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Undirected in-plan edge set, memoized per (app, sf): the persisted index
-# pre-merges this at BUILD time (r14a edges_undirected table) because it is
-# a per-index-version artifact, but the in-plan search re-paid the
-# union + distinct + eager checkpoint on EVERY call. Same lifecycle as
-# _KNN_EDGES_CACHE it derives from (released by unpersist_all; evicted by
-# ann_index_build(force=True) beside its source).
-_NSW_UND_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# Undirected in-plan edge set, memoized: the persisted index pre-merges
+# this at BUILD time (r14a edges_undirected table) because it is a
+# per-index-version artifact, but the in-plan search re-paid the
+# union + distinct + eager checkpoint on EVERY call.
+@memo
 def _nsw_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NSW_UND_CACHE:
-        knn = _ivf_knn_edges(spark, sf_dir, k_out=_NSW_K).select(
-            F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-        )
-        _NSW_UND_CACHE[key] = (
-            knn.unionByName(
-                knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    return _NSW_UND_CACHE[key]
+    knn = _ivf_knn_edges(spark, sf_dir, k_out=_NSW_K).select(
+        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
+    )
+    return (
+        knn.unionByName(knn.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def _nsw_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3699,8 +3594,8 @@ def _nsw_beam_search_frames(
     # after the loop (ADVICE r11: the previous shape re-unioned the
     # growing visited frame with distinct() + eager checkpoint every
     # round — O(rounds^2) materialized rows and 3 blocking jobs/round).
-    # Only the frontier checkpoints: each round's scored frame then roots
-    # at a checkpointed frontier, so lineage depth stays constant anyway.
+    # Each round's SCORED frame checkpoints (see score below) and the
+    # frontier is derived from it, so lineage depth stays constant.
     round_frames = []
     bw = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("node")
@@ -3826,23 +3721,14 @@ def ann_index_build(
         if not force:
             return path
         shutil.rmtree(path, ignore_errors=True)
-        # force promises "a real build, never a cached no-op" — but the
-        # component builders (_spherical_cells / _ivf_knn_edges /
-        # _vec_groups) memoize per applicationId, so without eviction
-        # every rebuild after the first reused the checkpointed edges
-        # and fitted centroids and the published build wall
+        # force promises "a real build, never a cached no-op": without
+        # eviction every rebuild after the first reused the memoized
+        # edges and fitted centroids, and the published build wall
         # under-reported the true cost (ADVICE r13 #4)
-        app = spark.sparkContext.applicationId
-        for cache in (
-            _SPH_CACHE,
-            _KNN_EDGES_CACHE,
-            _NSW_UND_CACHE,
-            _VEC_GROUPS_CACHE,
-            _VEC_DUP_DENSE,
-            _KNNG_ASSIGNED_CACHE,
-        ):
-            for k in [k for k in cache if k[0] == app and k[1] == sf_dir]:
-                cache.pop(k, None)
+        evict(
+            spark, sf_dir, _spherical_cells, _ivf_knn_edges, _nsw_und_edges,
+            _vec_groups, _vec_dup_dense, _knng_assigned,
+        )
     os.makedirs(path, exist_ok=True)
     cents = _spherical_cells(
         spark,

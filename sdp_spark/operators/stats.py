@@ -576,7 +576,10 @@ def _knn_scored_arrow(spark: SparkSession, sf_dir: str, a: DataFrame) -> DataFra
             qv_all = _np.asarray(
                 b.column("dvec").flatten(), dtype=_np.float64
             ).reshape(m_all, -1)
-            assert qv_all.shape[1] == dim
+            if qv_all.shape[1] != dim:
+                raise ValueError(
+                    f"query dim {qv_all.shape[1]} != candidate dim {dim}"
+                )
             for s in range(0, m_all, chunk):
                 qid = qid_all[s : s + chunk]
                 qn = qn_all[s : s + chunk]

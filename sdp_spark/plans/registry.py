@@ -86,218 +86,9 @@ def register(key: str, oracle: str | None = None, section: str = ""):
     return deco
 
 
-# Driver-sweep priority (round 6): the budget-capped sweep (~50 keys/round)
-# certified ~50 keys per round r1-r5; CORRECTNESS_r05 landed verdicts for
-# the first 50 list entries, leaving a 62-key never-verified backlog (the
-# round-5 keys past the cap). VERDICT r5 next-round #1: that backlog leads
-# round 6 — the sweep's 50-key cap takes exactly its first 50; the ~12
-# stragglers queue for r7. Behind them: round-6 NEW keys, then all
-# driver-green keys newest-round-first. An unlisted key sorts before
-# everything (rank -1) and would displace the backlog past the cap — to
-# deprioritize, list it; test_entry enforces registry == list exactly.
-# Keys whose OUTPUT or semantics changed after their last driver
-# certification — they must re-sweep this round even though green
-# (test_entry reads this to check the head of _SWEEP_PRIORITY).
-_SWEEP_REPROOFS = frozenset({
-    # (r13's eight reproofs all drew fresh r13 verdicts — 4 hash-green,
-    # 4 rows-only-by-design ANN keys — so the set reset at r14 start.)
-    # r14: the driver-side EM fit now folds p/(1-p) into the running
-    # E-step product FIRST (the SQL's left association, ADVICE r13 #1)
-    # — same math, potentially 1-ulp-different doubles through the
-    # snap grid; re-certify against the unchanged oracle.
-    "query_linkage_em_weights",
-    # r14: IVF-flat moved to sqrt-N cell geometry (K = ceil(sqrt(N))
-    # clamped [8,256], nprobe = K/4) — recall@5 0.891 -> 1.0 at sf0.1 at
-    # unchanged candidates/query; the result rows and the recall-eval's
-    # ivf rows both re-valued (oracle regenerated in lockstep).
-    "llm_sim_search_ivf",
-    "llm_ann_recall_eval",
-    # r14: the persisted index gained the pre-merged edges_undirected
-    # table — the manifest (and thus this key's component rows) widened
-    # 4 -> 5; the serve paths' OUTPUT is unchanged (pytest-pinned equal).
-    "llm_ann_index_persist",
-    # r14: the beam search scores entries BEFORE expanding (round-0
-    # prune) — output provably unchanged at the fixture sfs (recall@5
-    # stayed 1.0, so top-5 == exact top-5 == prior rows), but the
-    # execution path is new; re-certify (the EM-fit precedent).
-    "llm_sim_search_nsw",
-    "llm_ann_search_persisted",
-    "llm_ann_search_delta",
-})
-
-# The newest CORRECTNESS round on disk when the queue below was generated
-# (rewritten by tools/gen_sweep_queue.py): --check / the sync test compare
-# against compute(upto=this), so the driver dropping a NEWER round's file
-# after the round's final commit cannot turn the test red.
-_SWEEP_GENERATED_AT = 13
-
-_SWEEP_PRIORITY = (
-    # GENERATED by tools/gen_sweep_queue.py (VERDICT r12 next-round #8:
-    # the hand-maintained queue was the round-boundary red-test source
-    # twice). Queue law: NEED keys first inside the ~50-key sweep budget
-    # — (a) never-swept new keys, (b) _SWEEP_REPROOFS, (c) rows-only
-    # verdicts whose key has since gained a hash oracle — then every
-    # other key oldest-latest-verdict-first (alphabetical within a
-    # round). Regenerate at round start: python tools/gen_sweep_queue.py
-    # --- BEGIN GENERATED QUEUE (tools/gen_sweep_queue.py) ---
-    "catalog_privileges", "dml_cdc_apply", "dml_txn_changes", "dml_txn_multi",
-    "dml_txn_time_travel", "llm_ann_search_batch", "llm_ann_search_filtered",
-    "stream_cdc_apply", "llm_ann_index_persist", "llm_ann_recall_eval",
-    "llm_ann_search_delta", "llm_ann_search_persisted", "llm_sim_search_ivf",
-    "llm_sim_search_nsw", "query_linkage_em_weights", "catalog_show_describe",
-    "query_detector_concordance", "agg_approx_percentile", "agg_filtered",
-    "agg_funnel", "agg_mode", "agg_sketch_rollup", "catalog_ctas",
-    "dml_merge_scd2", "fn_encode", "fn_json_struct", "fn_spatial",
-    "join_asof_tolerance", "join_bucketed", "join_range_bucketed",
-    "join_spatial_grid", "llm_corpus_stats", "llm_cross_split_dedup",
-    "llm_decontaminate", "llm_dedup_prefix", "llm_dedup_softnorm",
-    "llm_doc_len_histogram", "llm_domain_mix", "llm_ngram_counts",
-    "llm_pack_sequences", "llm_pii_scrub", "llm_quality_gopher",
-    "llm_sample_temperature", "mm_decode_pipeline", "query_late_orders",
-    "query_returned_items", "query_shipping_priority", "scan_binary_files",
-    "scan_jdbc", "scan_text", "sink_autoincrement", "sink_compact",
-    "sink_insert_ignore", "sink_jsonl", "sink_outfile_csv", "sink_replace",
-    "sink_stream_upsert", "stream_late_metrics", "win_gap_islands",
-    "win_sessionize", "win_zscore", "agg_approx_topk", "agg_ohlc_resample",
-    "agg_percentile_disc", "dialect_mysql_query", "dialect_user_var_rownum",
-    "dml_truncate_partition", "fn_convert_tz", "fn_trig", "fulltext_bm25",
-    "join_dpp", "join_runtime_bloom", "join_scd2_pointintime",
-    "limit_found_rows", "llm_bpe_apply", "llm_bpe_pair_counts",
-    "llm_chunk_windows", "llm_cluster_kmeans", "llm_dedup_incremental",
-    "llm_dedup_substring", "llm_dedup_url_docs", "llm_embed_normalize",
-    "llm_embed_pca", "llm_embed_quantize", "llm_hybrid_search_rrf",
-    "llm_inverted_index", "llm_mix_epochs", "llm_perplexity_proxy",
-    "llm_sample_stratified", "llm_semdedup", "llm_shard_export",
-    "llm_url_normalize", "llm_vocab_oov", "query_cust_order_counts",
-    "query_disjunctive_parts", "query_dormant_customers",
-    "query_large_volume_cust", "query_local_supplier_volume",
-    "query_promo_effect", "query_top_supplier", "query_volume_shipping",
-    "scan_csv_malformed", "scan_multiformat_union", "sink_odku",
-    "sink_sized_files", "sink_zorder", "stream_ohlc", "stream_topk_windowed",
-    "subq_not_in_null", "ts_gap_fill", "agg_regression", "catalog_cross_db",
-    "catalog_sql_script", "catalog_sql_udf", "cte_recursive",
-    "dialect_prepared_stmt", "dq_referential_check", "filter_row_constructor",
-    "fn_aes_roundtrip", "fn_inet", "fn_mysql_string2", "fn_regex_advanced",
-    "fn_try_arith", "fn_variant_json", "fn_week_modes", "graph_degree",
-    "join_existence", "join_fuzzy_blocked", "join_null_safe",
-    "llm_blocklist_filter", "llm_corpus_lineage", "llm_pipeline_multimodal",
-    "mm_modality_stats", "query_dominant_suppliers", "query_forecast_revenue",
-    "query_important_stock", "query_market_share", "query_min_cost_supplier",
-    "query_outbreak_ears", "query_parts_supplier_cnt", "query_product_profit",
-    "query_shipmode_priority", "query_small_qty_orders",
-    "query_waiting_suppliers", "scan_incremental_files", "scan_numbers_table",
-    "scan_python_datasource", "scan_xml", "sink_dynamic_overwrite",
-    "sink_stream_partitioned", "stream_approx_distinct", "stream_ears_alerts",
-    "subq_correlated_scalar", "udf_map_in_arrow", "udtf_python_native",
-    "win_ewma", "win_ratio_to_report", "win_sliding_median",
-    "agg_bitmap_distinct", "agg_entropy", "agg_gini",
-    "agg_histogram_equiwidth", "agg_observe_metrics", "agg_skew_kurtosis",
-    "agg_weighted_percentile", "catalog_matview_incremental",
-    "dialect_dml_roundtrip", "dialect_identifier_param", "dialect_pipe_syntax",
-    "dq_anomaly_iqr", "dq_duplicate_pk_check", "dq_freshness_check",
-    "dq_mad_outlier", "dq_profile_table", "dq_winsorize",
-    "filter_collation_native", "fn_url_parse", "graph_bipartite_projection",
-    "graph_connected_components", "graph_shortest_path_bfs",
-    "graph_triangle_count", "join_interval_overlap", "llm_dataset_card",
-    "llm_dedup_near", "llm_dup_cluster_stats", "llm_quality_c4",
-    "llm_repetition_ngram", "mm_payload_dedup", "query_outbreak_cusum",
-    "scan_file_metadata", "scan_recursive_glob", "sink_compressed",
-    "stream_cusum_alerts", "stream_dedup_wm", "stream_matview_upkeep",
-    "stream_tumbling_wm", "stream_watermark", "subq_any_all",
-    "ts_interpolate_linear", "ts_seasonal_error", "udf_grouped_arrow",
-    "udf_pandas_iter", "win_cumulative_distinct", "win_fill_forward",
-    "win_rolling_corr", "agg_bootstrap_ci", "agg_chi2_independence",
-    "agg_hhi_concentration", "agg_indirect_standardization",
-    "agg_mann_whitney", "agg_market_basket", "agg_markov_transitions",
-    "agg_pareto_abc", "agg_period_growth", "agg_relative_risk",
-    "agg_retention_cohort", "agg_rfm_segmentation", "agg_survival_km",
-    "agg_time_to_event", "agg_welch_ttest", "dq_expectations_suite",
-    "dq_k_anonymity", "graph_common_neighbors", "graph_degree_assortativity",
-    "llm_bigram_perplexity", "llm_corpus_diff", "llm_dedup_containment",
-    "llm_embed_feature_hash", "llm_knn_graph", "llm_novelty_rate",
-    "llm_pmi_collocations", "llm_quality_classifier_linear", "llm_readability",
-    "llm_sample_importance", "llm_token_budget_alloc",
-    "llm_winnow_fingerprint", "llm_zipf_slope", "mm_payload_cdc",
-    "query_outbreak_histlimits", "sample_hash_group",
-    "sample_neyman_allocation", "sample_weighted_reservoir",
-    "stream_drift_psi", "stream_histlimits_alerts", "ts_autocorr",
-    "ts_changepoint_meanshift", "ts_cross_correlation",
-    "ts_decompose_seasonal", "ts_max_drawdown", "ts_rt_ratio",
-    "agg_capture_recapture", "agg_cmh_stratified", "agg_diagnostic_accuracy",
-    "agg_moran_grid", "agg_proportion_ztest", "catalog_information_schema",
-    "dml_changelog_trigger", "dq_benford", "dq_drift_psi", "dq_l_diversity",
-    "filter_fulltext_phrase", "fn_geo_geohash", "fn_geo_haversine",
-    "fn_geo_polygon", "fn_geo_wkt", "graph_k_core", "graph_label_propagation",
-    "graph_pagerank", "join_geo_nearest", "join_polygon_contains",
-    "llm_boilerplate_ngrams", "llm_cdc_chunk", "llm_curriculum_order",
-    "llm_dedup_embed_lsh", "llm_dedup_simhash", "llm_fingerprint",
-    "llm_hard_negatives", "llm_keyword_rake", "llm_quality_score",
-    "llm_rouge_overlap", "llm_span_corruption", "mm_patch_grid",
-    "query_outbreak_ewma", "query_outbreak_serfling", "query_spatial_hotspot",
-    "sample_balanced_class", "stream_ewma_alerts", "stream_rt_alerts",
-    "stream_serfling_alerts", "stream_session_wm", "stream_sliding_wm",
-    "stream_stateful_timeout", "stream_stream_join_outer", "ts_holt_linear",
-    "ts_mann_kendall", "ts_theil_sen", "win_event_sequence",
-    "agg_approx_distinct", "agg_bool_bit", "agg_count_distinct", "agg_cube",
-    "agg_direct_standardization", "agg_global", "agg_group_concat",
-    "agg_groupby", "agg_having", "agg_percentile", "agg_pivot", "agg_rollup",
-    "agg_stats", "dedup_distinct", "dml_update_delete", "filter_basic",
-    "filter_between", "filter_collation_ci", "filter_compound", "filter_in",
-    "filter_like", "filter_null", "filter_regexp", "fn_epiweek",
-    "fn_geo_wkt_shapes", "fulltext_query_expansion", "join_anti", "join_asof",
-    "join_broadcast", "join_cross", "join_full", "join_inner", "join_left",
-    "join_multiway", "join_polygon_intersects", "join_right", "join_salted",
-    "join_self", "join_semi", "join_theta_range", "project_case",
-    "query_outbreak_farrington", "stream_farrington_alerts",
-    "stream_nowcast_delay", "ts_nowcast_delay", "agg_meta_fixed_effects",
-    "agg_meta_random_effects", "cte_with", "fn_array_map", "fn_bitwise",
-    "fn_conditional", "fn_date", "fn_datetime_arith", "fn_geo_polygon_metrics",
-    "fn_geo_wkb", "fn_hash", "fn_json", "fn_map", "fn_math", "fn_mysql_misc",
-    "fn_mysql_misc2", "fn_stat_normal", "fn_string", "fn_string_regex",
-    "fn_substring_index", "limit_offset", "llm_dedup_exact", "llm_lang_filter",
-    "llm_nb_classifier", "llm_sim_search_ivfpq", "project_cast",
-    "project_select", "query_outbreak_nowcasted", "query_record_linkage",
-    "query_spatial_dbscan", "scan_csv", "scan_json", "scan_orc",
-    "scan_parquet", "scan_partition_pruned", "sink_append", "sink_overwrite",
-    "sink_partitioned", "sink_upsert", "sort_nulls",
-    "stream_linkage_incremental", "stream_rt_cori_alerts", "ts_rt_cori",
-    "ts_sir_fit", "agg_corr", "agg_grouping_sets", "agg_unpivot",
-    "llm_ann_insert_incremental", "llm_multimodal_cols", "llm_sim_search",
-    "llm_text_stats", "llm_tfidf_topterms", "query_spacetime_scan",
-    "query_spatial_scan_kulldorff", "set_except", "set_except_all",
-    "set_intersect", "set_intersect_all", "set_union", "set_union_all",
-    "sort_multikey", "stream_epidemic_onset", "stream_excess_burden",
-    "stream_spacetime_alerts", "subq_derived", "subq_in_exists",
-    "subq_lateral", "subq_scalar", "topk", "ts_epidemic_onset",
-    "ts_excess_burden", "udf_grouped_map", "udf_pandas_grouped_agg",
-    "udf_pandas_scalar", "udf_python", "udtf_explode", "win_cume_dist",
-    "win_first_last", "win_lag_lead", "win_nth_value", "win_ntile",
-    "win_range_frame", "win_rank", "win_row_number", "win_running",
-    "win_sliding_rows", "win_topk_group", "catalog_analyze_stats",
-    "catalog_ddl", "catalog_views", "filter_collation_accent",
-    "filter_fulltext", "filter_fulltext_bool", "fn_fuzzy", "fn_time_year",
-    "join_hinted", "llm_ann_index_update", "llm_dedup_embed",
-    "llm_dedup_near_resolve", "llm_dedup_ngram_jaccard", "llm_knn_graph_ivf",
-    "llm_langid", "llm_pipeline_e2e", "llm_pipeline_train_corpus",
-    "llm_pipeline_train_corpus_nd", "llm_sim_search_lsh", "llm_sim_search_pq",
-    "llm_token_count_bpe", "mm_frame_sample", "project_cast_lenient",
-    "project_enum_check", "project_set_check", "query_outbreak_ears_family",
-    "sample_systematic", "scan_schema_evolution", "sink_jdbc",
-    "sink_stream_foreachBatch", "sink_stream_jdbc", "source_stream_files",
-    "stream_ann_ingest", "stream_dedup", "stream_ears_family_alerts",
-    "stream_ingest", "stream_join_dim", "stream_session", "stream_sliding",
-    "stream_stateful", "stream_stream_join", "stream_tumbling",
-    # --- END GENERATED QUEUE ---
-)
-
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every operator module (idempotent) and return the registry,
-    ordered so the driver's budget-bounded sweep hits never-verified keys
-    first (see _SWEEP_PRIORITY)."""
+    """Import every operator module (idempotent) and return the registry in
+    registration order."""
     for mod in _OPERATOR_MODULES:
         importlib.import_module(mod)
-    rank = {k: i for i, k in enumerate(_SWEEP_PRIORITY)}
-    # unknown (newly added) keys sort before everything: they have no verdict
-    ordered = sorted(REGISTRY, key=lambda k: rank.get(k, -1))
-    return {k: REGISTRY[k] for k in ordered}
+    return dict(REGISTRY)

@@ -22,6 +22,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sdp_spark import memo
+
 TABLES = (
     "region",
     "nation",
@@ -67,7 +69,9 @@ def _pin_session_confs(spark: SparkSession) -> None:
 
 def table_fingerprint(sf_dir: str, name: str) -> tuple[int, int]:
     """(mtime_ns, size) of the table's parquet path — the staleness stamp
-    every per-(app, sf_dir) memo must carry in its key. A Spark overwrite
+    of the plan memos below and of every ``sdp_spark.memo`` entry (which
+    stamps each result with the fingerprints of the tables its build
+    read). A Spark overwrite
     deletes and recreates the directory (or file), so the mtime moves on
     ANY rewrite; a memo keyed without it would keep serving the old file
     list after a test (or a caller) rewrites a table in place — the exact
@@ -95,12 +99,9 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     broken by event_id in every consumer.
     """
     _pin_session_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        table_fingerprint(sf_dir, name),
-    )
+    fp = table_fingerprint(sf_dir, name)
+    memo.record(sf_dir, name, fp)
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name, fp)
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached

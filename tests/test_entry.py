@@ -108,96 +108,18 @@ def test_readme_freshness_distribution():
         }
 
 
-def test_sweep_priority_matches_registry():
-    """_SWEEP_PRIORITY and the registry must agree EXACTLY: an unlisted key
-    sorts first and displaces the 45-key unverified backlog past the sweep
-    budget (VERDICT r2 "What's wrong" #1), so unlisted keys are a bug."""
-    from sdp_spark.plans.registry import _SWEEP_PRIORITY, load_all
-
-    specs = load_all()
-    assert set(_SWEEP_PRIORITY) == set(specs), {
-        "listed_but_missing": set(_SWEEP_PRIORITY) - set(specs),
-        "unlisted": set(specs) - set(_SWEEP_PRIORITY),
-    }
-    assert len(_SWEEP_PRIORITY) == len(set(_SWEEP_PRIORITY)), "duplicate keys"
-    ordered = list(specs)
-    # The tuple is a FRESHNESS QUEUE (r11 regime): every key that NEEDS
-    # external certification this round — never swept, rows-only verdict
-    # that has since gained a hash oracle, or listed in _SWEEP_REPROOFS
-    # (green keys whose output/semantics changed after certification) —
-    # must sit inside the driver's ~50-key budget; every other key must
-    # appear oldest-latest-verdict-first, so each budget slot either
-    # certifies something new or refreshes the stalest certification
-    # (r9 VERDICT next-round #6: no verdict should age past ~6 rounds).
-    import glob
+def test_bench_refuses_prior_from_other_core_count(tmp_path):
+    """bench.py's vs_prior block compares against the newest BENCH_r*.json
+    only when it was taken at the same sf AND core count."""
     import json
-    import re
-    from pathlib import Path
 
-    from sdp_spark.plans.registry import _SWEEP_REPROOFS
+    import bench
 
-    root = Path(__file__).parent.parent
-    latest: dict[str, dict] = {}
-    latest_round: dict[str, int] = {}
-    files = sorted(
-        glob.glob(str(root / "CORRECTNESS_r*.json")),
-        key=lambda f: int(re.search(r"_r(\d+)", f).group(1)),
-    )
-    for f in files:
-        rnd = int(re.search(r"_r(\d+)", f).group(1))
-        for k, v in json.load(open(f)).items():
-            latest[k] = v
-            latest_round[k] = rnd
-    never = {k for k in specs if k not in latest}
-    stale_promoted = {
-        k
-        for k, s in specs.items()
-        if s.oracle is not None
-        and k in latest
-        and latest[k].get("err") == "no_oracle"
-    }
-    need = never | stale_promoted | set(_SWEEP_REPROOFS)
-    assert len(need) <= 50, f"{len(need) - 50} keys would miss the sweep"
-    head50 = set(ordered[:50])
-    assert need <= head50, {"missing_from_sweep_budget": need - head50}
-    # outside `need`, the queue must never put a fresher verdict before a
-    # staler one (new/changed keys are exempt — they sort wherever the
-    # head puts them). Keys whose latest verdict IS the newest round on
-    # disk are also exempt: the driver drops CORRECTNESS_r{N}.json AFTER
-    # the round's final commit, so the queue head the driver just swept
-    # becomes round-N-fresh without the static tuple moving — that head is
-    # definitionally fresh, not out of order (VERDICT r11 "What's wrong"
-    # #1: this very assertion went red on the post-round tree).
-    max_round = max(latest_round.values())
-    rounds = [
-        latest_round[k]
-        for k in ordered
-        if k not in need and latest_round.get(k, max_round) != max_round
-    ]
-    assert rounds == sorted(rounds), "freshness queue out of order"
-
-
-def test_sweep_priority_is_generated():
-    """_SWEEP_PRIORITY must equal tools/gen_sweep_queue.compute() exactly
-    (VERDICT r12 next-round #8: the hand-maintained tuple was the
-    round-boundary red-test source twice, r2 and r11 — the queue is now
-    derived from CORRECTNESS_r*.json + _SWEEP_REPROOFS by one command)."""
-    import sys
-    from pathlib import Path
-
-    root = Path(__file__).parent.parent
-    sys.path.insert(0, str(root / "tools"))
-    import gen_sweep_queue
-
-    from sdp_spark.plans.registry import _SWEEP_GENERATED_AT, _SWEEP_PRIORITY
-
-    # compare against the rounds that existed at generation time — the
-    # driver drops CORRECTNESS_r{N}.json after the round's final commit,
-    # and that file must not turn this red (the r2/r11 failure mode)
-    expected = gen_sweep_queue.compute(upto=_SWEEP_GENERATED_AT)
-    assert tuple(_SWEEP_PRIORITY) == expected, (
-        "stale _SWEEP_PRIORITY — run tools/gen_sweep_queue.py"
-    )
+    prior = {"sf": 0.1, "value": 1.0, "queries_min": {"topk": 1.0}, "load": {"cores": 32}}
+    (tmp_path / "BENCH_r01.json").write_text(json.dumps(prior))
+    assert bench._latest_prior_bench(0.1, 32, str(tmp_path)) == prior
+    assert bench._latest_prior_bench(0.1, 4, str(tmp_path)) is None
+    assert bench._latest_prior_bench(0.01, 32, str(tmp_path)) is None
 
 
 def test_catalog_in_sync():

@@ -124,11 +124,12 @@ def test_ngram_collapse_equals_uncollapsed(spark, sf_dir):
         }
 
 
-def test_resolve_collapse_equals_uncollapsed(spark):
+def test_resolve_collapse_equals_uncollapsed(spark, monkeypatch):
     """Keeper resolution must be branch-invariant: forcing the density gate
     dense vs sparse at sf0.1 must produce the identical (doc_id, keeper_doc,
     cluster_size, is_keeper) set. Covers the rep-graph propagation +
     member-projection rewrite (round 6)."""
+    from sdp_spark.memo import evict
     from sdp_spark.operators import llm
 
     sf = "/root/testdata/sf0.1"
@@ -136,17 +137,17 @@ def test_resolve_collapse_equals_uncollapsed(spark):
         pytest.skip("sf0.1 fixture absent")
 
     def run(force_dense):
-        key = (spark.sparkContext.applicationId, sf)
-        llm._COLLAPSE_DECISION[key] = force_dense
-        llm._RESOLVE_CACHE.pop(key, None)
+        # a dup fraction is always >= 0 and never > 1
+        monkeypatch.setattr(llm, "_NEAR_COLLAPSE_MIN_DUP_FRAC", 0.0 if force_dense else 2.0)
+        evict(spark, sf, llm._collapse_dense, llm._propagate_labels)
         try:
             return {
                 tuple(r)
                 for r in REGISTRY["llm_dedup_near_resolve"].fn(spark, sf).collect()
             }
         finally:
-            llm._COLLAPSE_DECISION.pop(key, None)
-            llm._RESOLVE_CACHE.pop(key, None)
+            monkeypatch.undo()
+            evict(spark, sf, llm._collapse_dense, llm._propagate_labels)
 
     sparse, dense = run(False), run(True)
     assert dense == sparse, {
@@ -169,9 +170,12 @@ def test_unpersist_all_releases_and_rebuilds(spark, sf_dir):
     from sdp_spark.operators import llm
 
     before = _pairs(REGISTRY["llm_dedup_near"].fn(spark, sf_dir))
-    assert llm._SIG_CACHE, "expected the signature cache to be populated"
+    sh = llm._cached_shingles(spark, sf_dir)
+    sig = llm._cached_signatures(spark, sf_dir)
+    assert sig.is_cached, "expected the signature memo to be populated"
     assert sdp_spark.unpersist_all() > 0
-    assert not llm._SH_CACHE and not llm._SIG_CACHE
+    assert not sh.is_cached and not sig.is_cached
+    assert llm._cached_signatures(spark, sf_dir) is not sig
     assert _pairs(REGISTRY["llm_dedup_near"].fn(spark, sf_dir)) == before
 
 
@@ -751,11 +755,12 @@ def test_pca_fit_invariants_and_projection(spark, sf_dir):
     deterministic run-to-run (cache cleared between fits)."""
     import numpy as np
 
-    from sdp_spark.operators.corpus import _PCA_CACHE, _pca_fit
+    from sdp_spark.memo import evict
+    from sdp_spark.operators.corpus import _pca_fit
 
-    _PCA_CACHE.clear()
+    evict(spark, sf_dir, _pca_fit)
     mean1, comps1, evr1 = _pca_fit(spark, sf_dir)
-    _PCA_CACHE.clear()
+    evict(spark, sf_dir, _pca_fit)
     mean2, comps2, evr2 = _pca_fit(spark, sf_dir)
     assert np.allclose(mean1, mean2) and np.allclose(comps1, comps2)
 
@@ -836,13 +841,14 @@ def test_kmeans_distributed_fit_matches_driver_fit(spark, sf_dir, monkeypatch):
     import numpy as np
 
     import sdp_spark.operators.llm as llm
+    from sdp_spark.memo import evict
 
-    llm._KM_CACHE.clear()
+    evict(spark, sf_dir, llm._kmeans_fit)
     driver_cents = llm._kmeans_fit(spark, sf_dir)
-    llm._KM_CACHE.clear()
+    evict(spark, sf_dir, llm._kmeans_fit)
     monkeypatch.setattr(llm, "_KM_FIT_SAMPLE", 0)  # force distributed path
     dist_cents = llm._kmeans_fit(spark, sf_dir)
-    llm._KM_CACHE.clear()
+    evict(spark, sf_dir, llm._kmeans_fit)
     assert len(driver_cents) == len(dist_cents)
     assert np.allclose(
         np.array(driver_cents), np.array(dist_cents), rtol=1e-9, atol=1e-12
@@ -1261,3 +1267,31 @@ def test_km_fit_sample_cap_derives_from_driver_heap(spark, monkeypatch):
     # override wins — the escape hatch the dual-path equality test uses
     monkeypatch.setattr(llm, "_KM_FIT_SAMPLE", 7)
     assert llm._km_fit_sample_cap(spark) == 7
+
+
+def test_pair_dots_rejects_unknown_id(spark, sf_dir):
+    """The NNDescent Arrow kernel gathers unit vectors by id; an edge whose
+    id is not in the embeddings (here above every id) must raise ValueError,
+    not IndexError or a silent mis-gather."""
+    from sdp_spark.operators import llm
+
+    edges = spark.createDataFrame(
+        [(10**12, 1, 0.0, 1)], "vec_id bigint, neighbor_id bigint, cos_sim double, rnk bigint"
+    )
+    with pytest.raises(Exception, match="ValueError: pair id not in the unit-vector frame"):
+        llm._nndescent_refine(spark, sf_dir, edges, 2, rounds=1)
+
+
+def test_propagate_loop_ansi_no_overflow(spark):
+    """The Σ(labels) convergence probe sums as decimal(38,0): ids near 2^62
+    overflow a BIGINT sum, which ANSI mode turns into ARITHMETIC_OVERFLOW."""
+    from sdp_spark.operators import llm
+
+    prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        pairs = spark.createDataFrame([(2**62, 2**62 + 1)], "doc_a bigint, doc_b bigint")
+        got = {tuple(r) for r in llm._propagate_loop(pairs).collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prior)
+    assert got == {(2**62, 2**62), (2**62 + 1, 2**62)}
